@@ -5,10 +5,11 @@ Every input the program receives is written here from one seed: the same
 seed gives byte-identical parquet files.  Three families:
 
 - ``offers.parquet`` -- the job-offer corpus the stub France Travail API
-  serves to the ``pipeline`` workload: word-bag descriptions with a fixed
-  share of exact copies, near-duplicate edits and null-id offers, and
-  regions skewed so the adaptive planner splits down to departement x
-  metier;
+  serves to the ``pipeline`` workload: word-bag descriptions shaped like
+  the engine's ``documents`` fixture, with its shares of exact copies and
+  near-duplicates, plus null-id offers and regions skewed so the adaptive
+  planner splits down to departement x metier (see the constants below
+  for what was measured and what was not);
 - TPC-H-like ``region nation customer supplier part orders lineitem
   events`` tables for the ``dashboard`` workload, with the column types
   and value shapes the registered relational queries and their DuckDB
@@ -16,7 +17,8 @@ seed gives byte-identical parquet files.  Three families:
   microsecond timestamps, unique window orderings);
 - ``churn_*`` docs and vectors for the ``index_churn`` workload: a base
   split, a pool of append batches, probe docs/vectors and the tombstone
-  schedule, plus ``kernel_*`` inputs for the ``functions`` microbench.
+  schedule, plus ``kernel_*`` inputs for the ``functions`` microbench,
+  all shaped like the ``documents`` and ``embeddings`` fixtures.
 
 Usage: gen.py <workload> <seed> <out_dir> [--tiny] [--kernels]
 Writes the input sizes to <out_dir>/sizes.json and prints them.
@@ -29,46 +31,45 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-VOCAB = (
-    "data engineer spark python sql cloud pipeline analyse emploi offre "
-    "poste contrat cdi cdd stage alternance equipe projet client mission "
-    "developpement logiciel java scala kafka airflow docker kubernetes "
-    "reporting tableau modele machine learning statistique entreprise "
-    "paris lyon nantes lille remote salaire experience junior senior "
-    "architecture streaming batch entrepot qualite gouvernance securite "
-    "api rest service produit metier agile scrum recherche innovation"
-).split()
-# plus 400 fixed two-syllable words: with a vocabulary this wide, unrelated
-# texts share few shingles, so the near-duplicate work is set by the planted
-# copies and edits rather than by chance collisions that vary with the seed
-SYLLABLES = [c + v for c in "bdfglmnprstv" for v in "aeiou"]
-VOCAB += [a + b for a in SYLLABLES for b in SYLLABLES][::9]
-ROME = ["M1801", "M1802", "M1803", "M1805", "M1806", "M1403", "M1810", "K2111"]
-ROME_W = [0.30, 0.20, 0.15, 0.10, 0.09, 0.07, 0.05, 0.04]
-PUNCT = [",", ".", "!", "?", ":", ";", "(", ")", "«", "»"]
+# Text shape, measured on the engine's `documents` fixture (5000 rows at
+# sf 0.1, 500 at sf 0.01; both give the same figures):
+# - 30 words, drawn uniformly (each 8829-9182 times in 270k tokens at sf 0.1);
+# - 10 to 100 words per text, uniformly (quartiles 32/54/76, mean 54.1);
+# - 5% near-duplicates (250 of 5000): a copy of another text with the word
+#   "dup" appended (234 of them exactly that, one word inserted);
+# - 0.16% exact copies (8 of 5000), byte-identical, no case or punctuation
+#   changes (no text holds anything but lowercase letters and spaces).
+# Between unrelated texts of this shape the 5-char-shingle Jaccard is 0.18
+# at the median and 0.26 at p99, far below the 0.6 near-duplicate
+# threshold, so the near-duplicate work is set by the planted copies.
+VOCAB = ("a agg batch big column customer data fast filter group hash join key "
+         "line merge order part query row scan slow small sort spark stream "
+         "table the value vector window").split()
+WORDS_MIN, WORDS_MAX = 10, 100
+NEAR_DUP_SHARE = 0.05
+EXACT_COPY_SHARE = 0.0016
+DUP_MARK = "dup"
+# Not measurable from any fixture; unverified against the reference's
+# offers:
+# - null-id share 2%: the engine's own dead-letter gate (i02) serves every
+#   50th offer without an id;
+# - metiers: the engine's tech and data ROME codes (Offres.techRomeCodes,
+#   Offres.dataRomeCodes), drawn uniformly like the i01-i03 gates'
+#   market segments;
+# - region skew: chosen, not measured, so the planner splits a region
+#   down to departement x metier (the gates' uniform regions stop at
+#   departement).
+NULL_ID_SHARE = 0.02
+ROME = ["M1801", "M1802", "M1803", "M1805", "M1806", "M1403"]
 
 
-def words(rng, lo, hi):
-    return list(rng.choice(VOCAB, size=int(rng.integers(lo, hi + 1))))
+def words(rng):
+    return list(rng.choice(VOCAB, size=int(rng.integers(WORDS_MIN, WORDS_MAX + 1))))
 
 
-def edit(rng, toks, share=0.06):
-    """Near-duplicate edit: replace ~share of the words, insert one, drop one."""
-    toks = list(toks)
-    for _ in range(max(1, int(len(toks) * share))):
-        toks[int(rng.integers(len(toks)))] = str(rng.choice(VOCAB))
-    toks.insert(int(rng.integers(len(toks) + 1)), str(rng.choice(VOCAB)))
-    del toks[int(rng.integers(len(toks)))]
-    return toks
-
-
-def decorate(rng, toks):
-    """Same normalized text, different surface: case and punctuation."""
-    out = []
-    for t in toks:
-        t = t.upper() if rng.random() < 0.1 else t
-        out.append(t + (str(rng.choice(PUNCT)) if rng.random() < 0.1 else ""))
-    return " ".join(out)
+def near_dup(toks):
+    """The fixture's near-duplicate: the source text with one word appended."""
+    return list(toks) + [DUP_MARK]
 
 
 def write(out, name, cols):
@@ -84,15 +85,15 @@ DEP_W = [0.60, 0.25, 0.15]
 
 
 def gen_offers(rng, n, out):
-    n_null = int(n * 0.03)
-    n_copy = int(n * 0.10)
-    n_near = int(n * 0.10)
+    n_null = round(n * NULL_ID_SHARE)
+    n_copy = round(n * EXACT_COPY_SHARE)
+    n_near = round(n * NEAR_DUP_SHARE)
     n_base = n - n_null - n_copy - n_near
-    base = [words(rng, 30, 80) for _ in range(n_base)]
+    base = [words(rng) for _ in range(n_base)]
     texts = [" ".join(t) for t in base]
-    texts += [decorate(rng, base[int(rng.integers(n_base))]) for _ in range(n_copy)]
-    texts += [" ".join(edit(rng, base[int(rng.integers(n_base))])) for _ in range(n_near)]
-    texts += [" ".join(words(rng, 30, 80)) for _ in range(n_null)]
+    texts += [texts[int(rng.integers(n_base))] for _ in range(n_copy)]
+    texts += [" ".join(near_dup(base[int(rng.integers(n_base))])) for _ in range(n_near)]
+    texts += [" ".join(words(rng)) for _ in range(n_null)]
     ids = [str(i) for i in rng.permutation(np.arange(100000, 100000 + n - n_null))]
     ids += [None] * n_null
     order = rng.permutation(n)
@@ -102,8 +103,9 @@ def gen_offers(rng, n, out):
     dep_idx = rng.choice(len(DEP_W), size=n, p=DEP_W)
     regions = [REGIONS[r][0] for r in reg_idx]
     deps = [f"{REGIONS[r][0]}D{d}" for r, d in zip(reg_idx, dep_idx)]
-    romes = list(rng.choice(ROME, size=n, p=ROME_W))
-    titles = [" ".join(words(rng, 2, 5)) for _ in range(n)]
+    romes = list(rng.choice(ROME, size=n))
+    # titles land with the offer but no stage reads them
+    titles = [" ".join(rng.choice(VOCAB, size=3)) for _ in range(n)]
     # the planner's per-filter cap: the top region and its top departement
     # saturate, so planning probes region -> departement -> departement x
     # metier; no leaf may overflow (an overflow is a dead-letter path the
@@ -120,6 +122,7 @@ def gen_offers(rng, n, out):
     })
     return {"offers": n, "offers_valid": n - n_null, "offers_null_id": n_null,
             "exact_copies": n_copy, "near_dups": n_near,
+            # 150 per page, as the engine's ingestion gates page
             "max_per_filter": max_per_filter, "page_size": 150}
 
 
@@ -213,12 +216,15 @@ def gen_tables(rng, sf, out):
 # index_churn: base split, append pool, probes, tombstone schedule
 # --------------------------------------------------------------------------
 
+# The `embeddings` fixture (2000 rows at sf 0.1): 64-d unit vectors with
+# no cluster structure. Its 10 labels are geometric noise: the median
+# cosine is 0.00 within a label as between labels, and each label's mean
+# vector has norm 0.07, about 1/sqrt(200). So: isotropic unit vectors.
 DIM = 64
 
 
-def unit_vecs(rng, centers, n):
-    c = centers[rng.integers(0, len(centers), n)]
-    v = c + rng.normal(0, 0.35, (n, DIM))
+def unit_vecs(rng, n):
+    v = rng.normal(0, 1, (n, DIM))
     return (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
 
 
@@ -227,25 +233,28 @@ def vec_col(v):
 
 
 def gen_churn(rng, n_base, n_cycles, batch, n_probes, n_tombs, out):
-    base = [words(rng, 30, 80) for _ in range(n_base)]
+    base = [words(rng) for _ in range(n_base)]
     base_ids = np.arange(n_base)
-    # append pool: half fresh texts, half near-duplicates of base docs, so
-    # every batch collides with the index and with itself
+    # append pool: fresh texts plus the fixture's near-duplicate share of
+    # copies of base docs, at least one per batch, so every batch collides
+    # with the index
+    n_near = max(1, round(batch * NEAR_DUP_SHARE))
     pool, pool_ids, pool_cycle = [], [], []
     next_id = n_base
     for c in range(n_cycles):
         for j in range(batch):
-            if j % 2 == 0:
-                toks = words(rng, 30, 80)
+            if j < batch - n_near:
+                toks = words(rng)
             else:
-                toks = edit(rng, base[int(rng.integers(n_base))])
+                toks = near_dup(base[int(rng.integers(n_base))])
             pool.append(" ".join(toks))
             pool_ids.append(next_id)
             pool_cycle.append(c)
             next_id += 1
-    # tombstones: base ids retired after cycle c's append; half the probes
-    # of later cycles are near-copies of already retired docs, so a
-    # visibility leak shows up as a returned tombstoned id
+    # tombstones: base ids retired after cycle c's append. Every probe is
+    # a near-duplicate of a base doc, and half the probes of later cycles
+    # copy an already retired doc (a check design, not a traffic claim),
+    # so a visibility leak shows up as a returned tombstoned id
     order = rng.permutation(base_ids)
     tombs = order[: n_cycles * n_tombs].reshape(n_cycles, n_tombs)
     probe_ids, probe_text, probe_cycle = [], [], []
@@ -257,7 +266,7 @@ def gen_churn(rng, n_base, n_cycles, batch, n_probes, n_tombs, out):
             else:
                 src = int(rng.integers(n_base))
             probe_ids.append(pid)
-            probe_text.append(" ".join(edit(rng, base[src], 0.03)))
+            probe_text.append(" ".join(near_dup(base[src])))
             probe_cycle.append(c)
             pid += 1
     write(out, "churn_docs", {
@@ -267,9 +276,8 @@ def gen_churn(rng, n_base, n_cycles, batch, n_probes, n_tombs, out):
     write(out, "churn_probe_docs", {
         "doc_id": pa.array(probe_ids, pa.int64()), "text": probe_text,
         "cycle": pa.array(probe_cycle, pa.int32())})
-    centers = rng.normal(0, 1, (16, DIM))
     n_pool = n_cycles * batch
-    vecs = unit_vecs(rng, centers, n_base + n_pool)
+    vecs = unit_vecs(rng, n_base + n_pool)
     write(out, "churn_vecs", {
         "vec_id": pa.array(np.arange(n_base + n_pool), pa.int64()),
         "embedding": vec_col(vecs),
@@ -293,11 +301,10 @@ def gen_churn(rng, n_base, n_cycles, batch, n_probes, n_tombs, out):
 def gen_kernels(rng, n, out):
     write(out, "kernel_docs", {
         "doc_id": pa.array(np.arange(n), pa.int64()),
-        "text": [decorate(rng, words(rng, 30, 80)) for _ in range(n)]})
-    centers = rng.normal(0, 1, (16, DIM))
+        "text": [" ".join(words(rng)) for _ in range(n)]})
     write(out, "kernel_vecs", {
         "vec_id": pa.array(np.arange(n), pa.int64()),
-        "embedding": vec_col(unit_vecs(rng, centers, n))})
+        "embedding": vec_col(unit_vecs(rng, n))})
     return {"kernel_rows": n}
 
 

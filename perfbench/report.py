@@ -9,6 +9,11 @@ import statistics
 PRIMARY = {"dashboard": "query", "index_churn": "probe"}
 LAYERS = ["sources", "jobs", "operators", "spark", "bench"]
 MB = 1024.0 * 1024.0
+# Jobs-layer calls that plan their source on the driver before their first
+# Spark job: IngestionJob.runWithOptions fetches its OAuth token, makes the
+# A1 count probe and, while the first write is planned, OffresScan's
+# count-probe planning. That prefix of the span is the sources layer's.
+SOURCE_PREFIX = {"IngestionJob.runWithOptions"}
 
 
 def median(xs):
@@ -162,6 +167,12 @@ class Trace:
         s = self.spans[sid]
         return union([(j["start"], j["end"]) for j in self.own_jobs.get(sid, [])], s["start"], s["end"])
 
+    def prefix_ms(self, sid):
+        """Time from the span's start to the start of its first job."""
+        s = self.spans[sid]
+        starts = [j["start"] for j in self.jobs_under(sid)]
+        return max(0.0, min(starts) - s["start"]) if starts else 0.0
+
     def span_stats(self, sid):
         """Span length, its jobs, and the share of it no job covers."""
         s = self.spans[sid]
@@ -212,23 +223,43 @@ def per_layer(rep):
         if k.endswith("_per_s"):
             m["functions." + k] = (v, "1/s")
     # self time per layer: a span's self time inside its own Spark jobs is
-    # the spark layer's, the rest its own layer's; op time under no span
-    # is the harness's ("bench")
+    # the spark layer's (this includes the page fetches, which run in the
+    # scan's tasks), the rest its own layer's, less a SOURCE_PREFIX span's
+    # driver-side planning prefix, which is the sources layer's; op time
+    # under no span, and the stub API's start-up, is the harness's ("bench")
     share = {l: 0.0 for l in LAYERS}
     in_ops = [sid for sid, s in tr.spans.items() if s["op"] in op_ids]
     for sid in in_ops:
         spark_ms = tr.spark_ms(sid)
+        own = max(0.0, tr.self_ms(sid) - spark_ms)
+        pre = min(own, tr.prefix_ms(sid)) if tr.spans[sid]["name"] in SOURCE_PREFIX else 0.0
         share["spark"] += spark_ms
-        share[tr.spans[sid]["layer"]] += max(0.0, tr.self_ms(sid) - spark_ms)
+        share["sources"] += pre
+        share[tr.spans[sid]["layer"]] += own - pre
     top = [(tr.spans[s]["start"], tr.spans[s]["end"]) for s in in_ops if tr.spans[s]["parent"] == -1]
     share["bench"] += op_ms - sum(union(top, o["start"], o["end"]) for o in traced)
     for l in LAYERS:
         m[f"layer.{l}.self_share"] = (share[l] / op_ms, "share")
-    tw = cycle_times(traced)
-    uw = cycle_times(untraced)
-    m["trace.overhead_share"] = ((sum(tw) / len(tw)) / (sum(uw) / len(uw)) - 1.0
-                                 if tw and uw else float("nan"), "share")
-    return m, layer_details(rep, tr, in_ops, traced)
+    pairs = overhead_pairs(rep["ops"])
+    m["trace.overhead_share"] = (median([t / u - 1.0 for u, t in pairs]), "share")
+    d = layer_details(rep, tr, in_ops, traced)
+    d["trace.cycle_pairs_s"] = pairs
+    return m, d
+
+
+def overhead_pairs(ops):
+    """(untraced, traced) cycle times of each pair of neighbouring cycles
+    (0-1, 2-3, ...); which member is traced alternates with the seed."""
+    secs, traced = {}, {}
+    for o in ops:
+        secs[o["cycle"]] = secs.get(o["cycle"], 0.0) + dur(o)
+        traced[o["cycle"]] = o["traced"]
+    pairs = []
+    for c in range(0, max(secs, default=-1), 2):
+        if c + 1 in secs and traced[c] != traced[c + 1]:
+            a, b = secs[c], secs[c + 1]
+            pairs.append((b, a) if traced[c] else (a, b))
+    return pairs
 
 
 def layer_details(rep, tr, in_ops, traced):
@@ -253,6 +284,9 @@ def layer_details(rep, tr, in_ops, traced):
             "sources.scan_s": median([p["scan_ms"] / 1000.0 for p in probes]),
             "sources.scan_task_skew": median(skew),
         })
+        d["sources.driver_prefix_s"] = median(
+            [tr.prefix_ms(sid) / 1000.0 for sid in in_ops
+             if tr.spans[sid]["name"] in SOURCE_PREFIX])
         ing = by_name.get("IngestionJob.runWithOptions", [])
         cur = by_name.get("CurationJob.run", [])
         for k, v in med_stats(ing, ["spark_jobs", "driver_gap_share", "output_mb"]).items():

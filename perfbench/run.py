@@ -182,7 +182,6 @@ def main():
         if a.trace:
             metrics, layer = report.per_layer(rep)
             details.update(layer)
-            details["traced_wall_s_vs_untraced"] = metrics["trace.overhead_share"][0]
             with open(os.path.join(BUILD, f"trace-{a.workload}-{a.seed}.json"), "w") as f:
                 json.dump({"details": details, "trace": rep["trace"], "ops": rep["ops"]}, f)
         else:

@@ -1,8 +1,5 @@
 package perfbench
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import scala.collection.mutable
 
 /** `dashboard`: analyst queries repeated in a seeded order over the
@@ -56,8 +53,7 @@ class Dashboard(r: Runner) extends Workload {
 
   override def finish(): Unit = {
     val oracle = graft.SparkEntry.oracleSql.filter { case (q, _) => queries.contains(q) }
-    Files.write(Paths.get(r.path("oracle_sql.json")),
-      Json.render(oracle).getBytes(StandardCharsets.UTF_8))
+    Main.writeJson(r.path("oracle_sql.json"), oracle)
   }
 }
 

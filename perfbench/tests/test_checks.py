@@ -1,6 +1,7 @@
 """Unit tests for the Python side of the benchmark: the DuckDB oracle
 comparison fails on a corrupted result, and the metric arithmetic (tail
-percentile, interval union, span self time) is right.
+percentile, interval union, span self time, layer shares, tracing
+overhead) is right.
 
     python3 -m unittest discover -s perfbench/tests
 """
@@ -72,6 +73,51 @@ class Arithmetic(unittest.TestCase):
         self.assertEqual(stats["spark_jobs"], 2)
         self.assertAlmostEqual(stats["driver_gap_share"], 0.7)
 
+
+def job(jid, span, start, end):
+    return {"id": jid, "span": span, "start": start, "end": end, "tasks": 1,
+            "failed_tasks": 0, "task_ms": end - start, "run_ms": end - start, "gc_ms": 0,
+            "input_b": 0, "shuffle_b": 0, "spill_b": 0, "output_b": 0,
+            "task_durations": [end - start]}
+
+
+def op(oid, kind, cycle, start, end, traced):
+    return {"id": oid, "kind": kind, "cycle": cycle, "label": "", "start": start,
+            "end": end, "items": 0, "traced": traced, "ok": True, "why": ""}
+
+
+class LayerShares(unittest.TestCase):
+    def rep(self):
+        """One traced ingest op of 100 ms: 5 ms of stub start-up, then an
+        IngestionJob span that plans for 30 ms before its first job."""
+        return {
+            "workload": "pipeline", "cores": 4, "details": {}, "kernels": {},
+            "ops": [op(0, "ingest", 0, 0.0, 100.0, True),
+                    op(1, "ingest", 1, 100.0, 190.0, False)],
+            "trace": {"spans": [
+                {"id": 0, "parent": -1, "op": 0, "layer": "bench",
+                 "name": "StubOffresServer", "start": 0.0, "end": 5.0},
+                {"id": 1, "parent": -1, "op": 0, "layer": "jobs",
+                 "name": "IngestionJob.runWithOptions", "start": 5.0, "end": 100.0}],
+                "jobs": [job(0, 1, 35.0, 75.0), job(1, 1, 80.0, 90.0)], "qes": []}}
+
+    def test_planning_prefix_is_the_sources_layer(self):
+        m, d = report.per_layer(self.rep())
+        self.assertAlmostEqual(m["layer.sources.self_share"][0], 0.30)
+        # 95 ms span - 50 ms of jobs - 30 ms prefix
+        self.assertAlmostEqual(m["layer.jobs.self_share"][0], 0.15)
+        self.assertAlmostEqual(m["layer.spark.self_share"][0], 0.50)
+        self.assertAlmostEqual(m["layer.bench.self_share"][0], 0.05)
+        self.assertAlmostEqual(d["sources.driver_prefix_s"], 0.030)
+
+    def test_overhead_pairs_neighbouring_cycles_either_parity(self):
+        # cycle times in seconds; op times are ms
+        even = [op(0, "x", 0, 0, 10e3, True), op(1, "x", 1, 10e3, 18e3, False),
+                op(2, "x", 2, 18e3, 29e3, True)]
+        self.assertEqual(report.overhead_pairs(even), [(8, 10)])
+        odd = [op(0, "x", 0, 0, 10e3, False), op(1, "x", 1, 10e3, 22e3, True),
+               op(2, "x", 2, 22e3, 30e3, False), op(3, "x", 3, 30e3, 39e3, True)]
+        self.assertEqual(report.overhead_pairs(odd), [(10, 12), (8, 9)])
 
 if __name__ == "__main__":
     unittest.main()
