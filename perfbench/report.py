@@ -12,7 +12,8 @@ MB = 1024.0 * 1024.0
 # Jobs-layer calls that plan their source on the driver before their first
 # Spark job: IngestionJob.runWithOptions fetches its OAuth token, makes the
 # A1 count probe and, while the first write is planned, OffresScan's
-# count-probe planning. That prefix of the span is the sources layer's.
+# count-probe planning. That prefix of the span is the sources layer's
+# (the first write's Catalyst planning, also in it, is not separated).
 SOURCE_PREFIX = {"IngestionJob.runWithOptions"}
 
 
